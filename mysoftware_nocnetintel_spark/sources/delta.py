@@ -15,9 +15,11 @@ the Iceberg writer's posture:
   layouts (multi-part, v2) are refused;
 - commits are filesystem-CAS: put-if-absent creation of
   ``<version>.json`` via ``os.link`` (the spec's log-store contract on a
-  POSIX filesystem); a lost race raises :class:`DeltaCommitConflict`
-  (appends retry internally). Object stores without atomic link still
-  need a real log store — that remains the delta-spark production path;
+  POSIX filesystem); a lost race raises :class:`DeltaCommitConflict`.
+  Appends, validated data verbs and recomputable maintenance retry
+  through the shared protocol in ``sources/commit.py``. Object stores
+  without atomic link still need a real log store — that remains the
+  delta-spark production path;
 - refuses to write to tables it didn't create (unknown protocol/features
   could be silently violated) and to tables whose schema doesn't match.
 
@@ -35,6 +37,13 @@ import uuid
 from glob import glob
 
 from pyspark.sql import DataFrame
+
+from .commit import (
+    APPEND_ATTEMPTS,
+    CommitConflict,
+    commit_with_retry,
+    recompute_on_conflict,
+)
 
 _WRITER_TAG = "mysoftware-nocnetintel-spark-minimal"
 
@@ -240,15 +249,17 @@ def _schema_sig(schema_json: str) -> list[tuple[str, object]]:
     return sorted((f["name"], json.dumps(f["type"])) for f in s["fields"])
 
 
-class DeltaCommitConflict(RuntimeError):
-    """Another writer committed this log version first. Appends retry
-    internally (new data files have unique names and adds commute, as
-    long as the schema/partition layout didn't change underneath), and
-    the data-semantic verbs (DELETE / UPDATE / MERGE) auto-retry after
-    FILE-OVERLAP VALIDATION (``_commit_data_version``, round 7 — the
-    Delta twin of the Iceberg writer's ``_retry_head``); overwrite /
-    restore / checkpoint commits surface this — their action lists were
-    computed against the old state, so re-run them."""
+class DeltaCommitConflict(CommitConflict):
+    """Another writer committed this log version first. Every retry runs
+    through :func:`~.commit.commit_with_retry`: appends retry on top of
+    the winner (new data files have unique names and adds commute, as
+    long as the schema/partition layout didn't change underneath), the
+    data-semantic verbs (DELETE / UPDATE / MERGE / partition drop) retry
+    after FILE-OVERLAP VALIDATION (``_commit_data_version``, the Delta
+    twin of the Iceberg writer's ``_retry_head``), and maintenance verbs
+    recompute; overwrite / restore / checkpoint commits surface this —
+    their action lists were computed against the old state, so re-run
+    them."""
 
 
 def _layout_sig(state: dict):
@@ -259,53 +270,30 @@ def _layout_sig(state: dict):
     )
 
 
-def _retry_recompute(fn):
-    """Auto-retry (3 attempts, jittered growing backoff) for
-    RECOMPUTABLE Delta commits — maintenance verbs that reload the table
-    head on entry and re-derive their whole action list, so re-running
-    against the winner's state is semantically a fresh invocation (the
-    Delta twin of iceberg's ``_retry_on_conflict``). The verb itself
-    must clean its staged files before re-raising the conflict."""
-    import functools
-    import random
-
-    @functools.wraps(fn)
-    def wrapper(*args, **kwargs):
-        last: DeltaCommitConflict | None = None
-        for attempt in range(3):
-            if attempt:
-                time.sleep(random.uniform(0, 0.05 * (2**attempt)))
-            try:
-                return fn(*args, **kwargs)
-            except DeltaCommitConflict as e:
-                last = e
-        raise last
-
-    return wrapper
-
-
-def _rescan_retry(fn, attempts: int = 3):
-    """SNAPSHOT-ISOLATION RE-SCAN RETRY (round 8, opt-in via the verbs'
-    ``on_conflict="rescan"``; the Delta twin of iceberg._rescan_retry):
-    when a data-semantic verb surfaces a conflict that validated retry
-    could not absorb, re-run the WHOLE verb against the winner's head —
-    a fresh invocation replays the log, re-derives every decision
-    (matched keys, touched files, DV coordinates), and commits against
-    the new state: the serial order "winner first, then this verb".
-    Jittered growing backoff; losing attempts already cleaned their
-    staged files/DV bins. The caller's source/predicate re-evaluates
-    per attempt, so it must be deterministic."""
-    import random
-
-    last: DeltaCommitConflict | None = None
-    for attempt in range(attempts):
-        if attempt:
-            time.sleep(random.uniform(0, 0.05 * (2**attempt)))
-        try:
-            return fn()
-        except DeltaCommitConflict as e:
-            last = e
-    raise last
+def _staged_files(
+    root: str, actions: list[dict], base_live: "dict | None" = None
+) -> list[str]:
+    """Files under table ``root`` that ``actions`` stage: every added
+    file not live in ``base_live``, plus each deletion-vector bin whose
+    descriptor is new relative to it (every MOR commit mints a fresh
+    UUID-named bin, so no base entry can share one; several re-adds span
+    one bin). Re-adds of pre-existing files are not staged files."""
+    base_live = base_live or {}
+    out: set[str] = set()
+    for a in actions:
+        add = a.get("add") or {}
+        rel = add.get("path")
+        if not rel:
+            continue
+        old = base_live.get(rel)
+        if old is None:
+            out.add(os.path.join(root, rel))
+        dv = add.get("deletionVector")
+        if dv and dv != (old or {}).get("deletionVector"):
+            p = _dv_rel_path(dv)
+            if p:
+                out.add(os.path.join(root, p))
+    return sorted(out)
 
 
 def _commit_data_version(
@@ -315,75 +303,43 @@ def _commit_data_version(
     base_state: dict,
     touched: "list[str] | set[str]",
 ) -> int:
-    """Validated-retry commit for the data-semantic verbs (round 7):
-    a DELETE/UPDATE/MERGE whose CAS loses re-commits on top of the
-    winner iff the winner provably didn't touch its basis — the schema
-    and partition layout are unchanged AND every live entry this verb
-    removes/re-adds (``touched``) is byte-identical at the new head
+    """Validated-retry commit for the data-semantic verbs: a
+    DELETE/UPDATE/MERGE whose CAS loses re-commits on top of the winner
+    iff the winner provably didn't touch its basis — the writer tag,
+    schema and partition layout are unchanged AND every live entry this
+    verb removes/re-adds (``touched``) is byte-identical at the new head
     (same add action: same stats, same deletion vector). A winner that
     only APPENDED passes; one that compacted, deleted from, or rewrote
-    any touched file fails validation, this verb's NEWLY staged data
-    files are removed (re-adds of pre-existing files are left alone),
-    and the conflict surfaces for the caller to re-decide."""
-    import random
+    any touched file fails validation and the conflict surfaces for the
+    caller to re-decide. Whenever the commit does not land, this verb's
+    newly staged files (:func:`_staged_files`) are removed."""
 
-    last: DeltaCommitConflict | None = None
-    for attempt in range(3):
-        if attempt:
-            time.sleep(random.uniform(0, 0.05 * (2**attempt)))
-        try:
-            _commit_version(log_dir, version, actions)
-            return version
-        except DeltaCommitConflict as e:
-            last = e
-            state = _replay_state(log_dir)
-            meta = state.get("meta") or {}
-            ok = (
-                (meta.get("configuration") or {}).get("writer")
-                == _WRITER_TAG
-                and _layout_sig(state) == _layout_sig(base_state)
-                and all(
-                    state["live"].get(rel) == base_state["live"].get(rel)
-                    for rel in touched
-                )
+    def rebase(conflict):
+        nonlocal version
+        state = _replay_state(log_dir)
+        meta = state.get("meta") or {}
+        if not (
+            (meta.get("configuration") or {}).get("writer") == _WRITER_TAG
+            and _layout_sig(state) == _layout_sig(base_state)
+            and all(
+                state["live"].get(rel) == base_state["live"].get(rel)
+                for rel in touched
             )
-            if not ok:
-                root = os.path.dirname(log_dir)
-                dv_bins: set[str] = set()
-                for a in actions:
-                    add = a.get("add") or {}
-                    rel = add.get("path")
-                    if rel and rel not in base_state["live"]:
-                        try:
-                            os.remove(os.path.join(root, rel))
-                        except OSError:
-                            pass
-                    # a MOR re-add whose DV descriptor is NEW relative to
-                    # base_state references a bin file this failed attempt
-                    # wrote (every MOR commit mints a fresh UUID file, so
-                    # no base entry can share it) — delete it too, or the
-                    # bin strands as an orphan (round-7 advisor). Several
-                    # re-adds span one file; the set dedups.
-                    dv = add.get("deletionVector")
-                    if (
-                        rel
-                        and dv
-                        and dv
-                        != (base_state["live"].get(rel) or {}).get(
-                            "deletionVector"
-                        )
-                    ):
-                        p = _dv_rel_path(dv)
-                        if p:
-                            dv_bins.add(os.path.join(root, p))
-                for p in dv_bins:
-                    try:
-                        os.remove(p)
-                    except OSError:
-                        pass
-                raise
-            version = state["version"] + 1
-    raise last
+        ):
+            raise conflict
+        version = state["version"] + 1
+
+    def attempt(_written):
+        _commit_version(log_dir, version, actions)
+        return version
+
+    return commit_with_retry(
+        attempt,
+        rebase=rebase,
+        staged=_staged_files(
+            os.path.dirname(log_dir), actions, base_state["live"]
+        ),
+    )
 
 
 def _physical_names(meta: dict | None) -> dict[str, str]:
@@ -767,14 +723,9 @@ def write_delta_append(
         if done is not None and done >= tv:
             return _replay_state(log_dir)["version"]
 
-    def _sig(state: dict):
-        m = state.get("meta") or {}
-        return (
-            m.get("schemaString"),
-            tuple(m.get("partitionColumns") or ()),
-        )
-
-    staged_sig = _sig(_replay_state(log_dir)) if os.path.isdir(log_dir) else None
+    staged_sig = (
+        _layout_sig(_replay_state(log_dir)) if os.path.isdir(log_dir) else None
+    )
     version, actions = _stage_append(
         df, path, partition_by, sort_by=sort_by, zorder=zorder
     )
@@ -788,43 +739,38 @@ def write_delta_append(
                 }
             }
         ] + actions
-    last_err: DeltaCommitConflict | None = None
-    for _attempt in range(5):
-        if _attempt:
-            # jittered growing backoff (r13, mirrors _retry_on_conflict):
-            # back-to-back CAS retries under burst contention lose every
-            # race in the same wave; 5 attempts absorb a maintainer +
-            # injected-fault storm on a loaded box. The retry
-            # re-validates writer/schema/txn per attempt, so more tries
-            # never change what lands.
-            import random as _random
 
-            time.sleep(_random.uniform(0, 0.05 * (2 ** _attempt)))
-        try:
-            _commit_version(log_dir, version, actions)
-            return version
-        except DeltaCommitConflict as e:
-            last_err = e
-            # CAS lost. Plain appends COMMUTE (the staged files carry
-            # unique names and are already in the table root), so retry
-            # on top of the winner — but only if this commit carries no
-            # metaData/protocol action (create / schema evolution don't
-            # commute) and the winner didn't change the schema or
-            # partition layout underneath us.
-            if any("metaData" in a or "protocol" in a for a in actions):
-                raise
-            new_state = _replay_state(log_dir)
-            meta = new_state.get("meta") or {}
-            if (meta.get("configuration") or {}).get(
-                "writer"
-            ) != _WRITER_TAG or _sig(new_state) != staged_sig:
-                raise
-            if txn is not None:
-                done = new_state["txns"].get(txn[0])
-                if done is not None and done >= int(txn[1]):
-                    return new_state["version"]  # winner was our batch
-            version = new_state["version"] + 1
-    raise last_err
+    def rebase(conflict):
+        # Plain appends COMMUTE (the staged files carry unique names and
+        # are already in the table root), so retry on top of the winner —
+        # but only if this commit carries no metaData/protocol action
+        # (create / schema evolution don't commute) and the winner didn't
+        # change the writer, schema or partition layout underneath us.
+        nonlocal version
+        if any("metaData" in a or "protocol" in a for a in actions):
+            raise conflict
+        new_state = _replay_state(log_dir)
+        meta = new_state.get("meta") or {}
+        if (meta.get("configuration") or {}).get(
+            "writer"
+        ) != _WRITER_TAG or _layout_sig(new_state) != staged_sig:
+            raise conflict
+        if txn is not None:
+            done = new_state["txns"].get(txn[0])
+            if done is not None and done >= int(txn[1]):
+                return new_state["version"]  # winner was our batch
+        version = new_state["version"] + 1
+
+    def attempt(_written):
+        _commit_version(log_dir, version, actions)
+        return version
+
+    return commit_with_retry(
+        attempt,
+        attempts=APPEND_ATTEMPTS,
+        rebase=rebase,
+        staged=_staged_files(path, actions),
+    )
 
 
 # spark dtypes whose parquet statistics are safe to publish as add.stats
@@ -1145,19 +1091,13 @@ def write_delta_overwrite(df: DataFrame, path: str) -> int:
         }
         for rel in live
     ] + add_actions
-    try:
-        _commit_version(log_dir, version, actions)
-    except DeltaCommitConflict:
-        # overwrite is not validated-retry: clean this attempt's staged
-        # files and surface — the caller re-runs against the new head
-        for a in add_actions:
-            rel = a.get("add", {}).get("path")
-            if rel:
-                try:
-                    os.remove(os.path.join(path, rel))
-                except OSError:
-                    pass
-        raise
+    # overwrite is not validated-retry: one attempt; a lost CAS cleans
+    # the staged files and surfaces — the caller re-runs on the new head
+    commit_with_retry(
+        lambda _written: _commit_version(log_dir, version, actions),
+        attempts=1,
+        staged=_staged_files(path, add_actions),
+    )
     return version
 
 
@@ -1370,8 +1310,8 @@ def delete_delta_rows(
         # snapshot-isolation serial re-execution (round 8): re-run the
         # whole DELETE against the winner's head — fresh replay, fresh
         # (file, pos) coordinates and DV merge targets
-        return _rescan_retry(
-            lambda: delete_delta_rows(spark, path, predicate)
+        return commit_with_retry(
+            lambda _written: delete_delta_rows(spark, path, predicate)
         )
     log_dir = os.path.join(path, "_delta_log")
     state = _replay_state(log_dir)
@@ -1729,8 +1669,8 @@ def merge_delta_rows(
         # snapshot-isolation serial re-execution (round 8): the whole
         # merge re-runs against the winner's head — fresh key
         # membership, fresh touched-file set, fresh ambiguity probe
-        return _rescan_retry(
-            lambda: merge_delta_rows(
+        return commit_with_retry(
+            lambda _written: merge_delta_rows(
                 spark, path, source, on, when_matched,
                 when_not_matched, strategy,
             )
@@ -2025,8 +1965,8 @@ def update_delta_rows(
     if on_conflict == "rescan":
         # snapshot-isolation serial re-execution (round 8): fresh scan,
         # fresh touched files / DV coordinates / rewritten images
-        return _rescan_retry(
-            lambda: update_delta_rows(
+        return commit_with_retry(
+            lambda _written: update_delta_rows(
                 spark, path, predicate, set_exprs, strategy
             )
         )
@@ -2557,7 +2497,7 @@ def vacuum_delta(
     return deleted
 
 
-@_retry_recompute
+@recompute_on_conflict
 def repartition_delta_table(
     spark,
     path: str,
@@ -2578,7 +2518,8 @@ def repartition_delta_table(
     tailers skip the range exactly like an OPTIMIZE. Time travel below
     the migration resolves each version's own metaData, so pre-migration
     reads keep the old layout and pruning. Lost CAS races recompute
-    (``_retry_recompute``) with the attempt's staged files cleaned.
+    (``commit.recompute_on_conflict``) with each run's staged files
+    cleaned.
 
     At 100 TB this is the planned-downtime-free alternative to
     recreate-and-backfill: one distributed scan + partitioned write,
@@ -2647,23 +2588,17 @@ def repartition_delta_table(
             a["add"]["dataChange"] = False
     actions += add_actions
     log_dir = os.path.join(path, "_delta_log")
-    try:
-        _commit_version(log_dir, version, actions)
-    except DeltaCommitConflict:
-        # recomputable: clean this attempt's staged files and let the
-        # decorator re-run against the winner's head
-        for a in add_actions:
-            rel = a.get("add", {}).get("path")
-            if rel:
-                try:
-                    os.remove(os.path.join(path, rel))
-                except OSError:
-                    pass
-        raise
+    # recomputable: a lost CAS cleans this run's staged files and the
+    # decorator re-runs the verb against the winner's head
+    commit_with_retry(
+        lambda _written: _commit_version(log_dir, version, actions),
+        attempts=1,
+        staged=_staged_files(path, add_actions),
+    )
     return version
 
 
-@_retry_recompute
+@recompute_on_conflict
 def optimize_delta_table(
     spark,
     path: str,
@@ -2737,23 +2672,17 @@ def optimize_delta_table(
     for a in add_actions:
         if "add" in a:
             a["add"]["dataChange"] = False
-    try:
-        _commit_version(
+    # OPTIMIZE is recomputable maintenance (the Delta twin of
+    # rewrite_iceberg_table's auto-retry): a lost CAS cleans this run's
+    # staged compacted files and the decorator re-runs the whole verb
+    # against the winner's head
+    commit_with_retry(
+        lambda _written: _commit_version(
             os.path.join(path, "_delta_log"), version, removes + add_actions
-        )
-    except DeltaCommitConflict:
-        # OPTIMIZE is recomputable maintenance (the Delta twin of
-        # rewrite_iceberg_table's auto-retry): clean this attempt's
-        # staged compacted files and let the decorator re-run the whole
-        # verb against the winner's head
-        for a in add_actions:
-            rel = a.get("add", {}).get("path")
-            if rel:
-                try:
-                    os.remove(os.path.join(path, rel))
-                except OSError:
-                    pass
-        raise
+        ),
+        attempts=1,
+        staged=_staged_files(path, add_actions),
+    )
     return version
 
 

@@ -1,29 +1,39 @@
-"""Minimal Apache Iceberg APPEND writer (companion to
+"""Minimal Apache Iceberg writer (companion to
 ``readers.read_iceberg_snapshot``), built on the PUBLIC Iceberg table spec
 (iceberg.apache.org/spec/). Honestly scoped and fail-fast:
 
-- format-version 2, UNPARTITIONED, parquet data files, append-only;
+- format-version 2, parquet (and row-format avro) data files,
+  unpartitioned or partitioned by spec transforms, with partition spec
+  and additive schema evolution;
+- APPEND (``write_iceberg_append``, branch appends included), merge-on-read
+  DELETE via position and equality delete files, MERGE/upsert
+  (``merge_iceberg_rows``) and UPDATE (``update_iceberg_rows``);
+  maintenance: compaction and bin-packing (``rewrite_iceberg_table``),
+  manifest consolidation, metadata-only partition drop, snapshot
+  expiration, orphan-file removal, rollback, refs (tags/branches) and
+  column rename/drop;
 - the metadata version bump is a FILESYSTEM compare-and-swap
   (``_commit_metadata``: hard-link put-if-absent of
   ``v<N>.metadata.json``, the HadoopTableOperations recipe) — a lost
   race raises :class:`IcebergCommitConflict` instead of clobbering the
-  winner. Appends retry on top of it (they commute), RECOMPUTABLE
-  commits — compaction, manifest rewrite, expiration, ref/schema moves
-  — auto-retry too (``_retry_on_conflict``), and data-SEMANTIC writers
-  (delete/update/merge) auto-retry after FILE-OVERLAP VALIDATION
-  (``_retry_head``, round 7): retry iff the winning commits are
-  provably disjoint from this commit's basis (schema/spec unchanged,
-  every referenced file still live, no new delete content over the
-  rewritten files), else the conflict surfaces for the caller to
-  re-decide against the new head. Object stores without
-  atomic link/rename still need a real catalog (REST/Hive/Glue) — that
-  remains the production path;
-- refuses to append to tables it didn't create (unknown features could
+  winner. Every retry goes through the shared protocol in
+  ``sources/commit.py``: appends retry on top of the winner (they
+  commute), RECOMPUTABLE commits — compaction, manifest rewrite,
+  expiration, ref/schema moves — re-run, and data-SEMANTIC writers
+  (delete/update/merge) retry after FILE-OVERLAP VALIDATION
+  (``_retry_head``): retry iff the winning commits are provably
+  disjoint from this commit's basis (schema/spec unchanged, every
+  referenced file still live, no new delete content over the rewritten
+  files), else the conflict surfaces for the caller to re-decide
+  against the new head. Object stores without atomic link/rename still
+  need a real catalog (REST/Hive/Glue) — that remains the production
+  path;
+- refuses to write to tables it didn't create (unknown features could
   be silently dropped).
 
-The COMMIT is driver-side KB-scale metadata (one manifest Avro, one
-manifest-list Avro, one metadata.json); the data write itself is a normal
-distributed ``df.write.parquet``.
+The COMMIT is driver-side KB-scale metadata (manifest Avros, one
+manifest-list Avro, one metadata.json); the data write itself is a
+normal distributed ``df.write.parquet``.
 """
 
 from __future__ import annotations
@@ -39,6 +49,13 @@ from glob import glob
 from pyspark.sql import DataFrame
 
 from .avro_lite import write_avro_file
+from .commit import (
+    APPEND_ATTEMPTS,
+    CommitConflict,
+    commit_with_retry,
+    recompute_on_conflict,
+    remove_quietly,
+)
 
 _WRITER_TAG = "mysoftware-nocnetintel-spark-minimal"
 
@@ -344,80 +361,31 @@ def _default_spec_id(meta: dict | None) -> int:
     return int(meta.get("default-spec-id", 0))
 
 
-def _retry_on_conflict(fn):
-    """Auto-retry (3 attempts) for RECOMPUTABLE commits — maintenance
-    verbs (compaction, manifest rewrite, expiration) and metadata-only
-    ref/schema moves. Each of these reloads the table head on entry and
-    re-validates its preconditions, so re-running against the winning
-    writer's snapshot is semantically a fresh invocation, never a lost
-    update (round-5 verdict task 8: only appends retried before). Each
-    losing attempt deletes its own staged files before the exception
-    reaches this wrapper (round-6 advisor — no orphan pile-up across
-    retries; see the conflict-cleanup blocks in the verbs). Data-SEMANTIC
-    writers (delete/update/merge) deliberately do NOT retry blindly —
-    see :func:`_retry_data_commit` for the validated-retry path.
-
-    Attempts are spaced by a small RANDOMIZED sleep (0-150 ms, growing
-    per attempt): back-to-back retries under sustained append contention
-    lose every CAS race in the same burst; jitter de-synchronizes the
-    losers (the same reason Iceberg's commit properties default to
-    exponential backoff)."""
-    import functools
-    import random
-    import time as _time
-
-    @functools.wraps(fn)
-    def wrapper(*args, **kwargs):
-        last: IcebergCommitConflict | None = None
-        for attempt in range(3):
-            if attempt:
-                _time.sleep(random.uniform(0, 0.05 * (2**attempt)))
-            try:
-                return fn(*args, **kwargs)
-            except IcebergCommitConflict as e:
-                last = e
-        raise last
-
-    return wrapper
-
-
-def _rescan_retry(fn, attempts: int = 3):
-    """SNAPSHOT-ISOLATION RE-SCAN RETRY (round 8, opt-in via the verbs'
-    ``on_conflict="rescan"``): when a data-semantic verb surfaces a
-    conflict that validated retry could not absorb (its actions depended
-    on a scan of the pre-race table), re-run the WHOLE verb against the
-    winner's head — a fresh invocation reloads the snapshot, re-derives
-    every decision (matched keys, touched files, row coordinates), and
-    commits against the new state, exactly the serial order "winner
-    first, then this verb". Jittered growing backoff between attempts;
-    the losing attempt already cleaned its staged files (every verb's
-    surface path does), so retries strand nothing. Bounded attempts —
-    the final conflict propagates. The caller's source/predicate is
-    re-evaluated per attempt, so it must be deterministic (a DataFrame
-    over stable input, not a consumed stream)."""
-    import random
-    import time as _time
-
-    last: IcebergCommitConflict | None = None
-    for attempt in range(attempts):
-        if attempt:
-            _time.sleep(random.uniform(0, 0.05 * (2**attempt)))
-        try:
-            return fn()
-        except IcebergCommitConflict as e:
-            last = e
-    raise last
-
-
-class IcebergCommitConflict(RuntimeError):
+class IcebergCommitConflict(CommitConflict):
     """Another writer committed the metadata version this commit was
-    staged against. Appends retry internally (they commute),
-    recomputable maintenance/ref commits auto-retry
-    (``_retry_on_conflict``), and the data-semantic verbs
-    (delete/update/merge) auto-retry AFTER file-overlap validation
-    (``_retry_head``, round 7) — when validation shows the winning
-    commit could have invalidated this one's scan basis, the conflict
-    surfaces and the caller re-runs against the new table state."""
+    staged against. Every retry runs through
+    :func:`~.commit.commit_with_retry`: appends retry on top of the
+    winner (they commute), recomputable maintenance/ref commits re-run
+    (``commit.recompute_on_conflict``), and the data-semantic verbs
+    (delete/update/merge) retry AFTER file-overlap validation
+    (``_retry_head``) — when validation shows the winning commit could
+    have invalidated this one's scan basis, the conflict surfaces and
+    the caller re-runs against the new table state."""
+
+
+def _table_sig(meta: dict | None) -> str:
+    """Layout signature a staged commit depends on: the schemas,
+    partition specs and default spec id. A winner that changed it
+    invalidates staged files (they embed field ids, bounds and partition
+    records)."""
+    return json.dumps(
+        [
+            (meta or {}).get("schemas"),
+            (meta or {}).get("partition-specs"),
+            (meta or {}).get("default-spec-id"),
+        ],
+        sort_keys=True,
+    )
 
 
 def _retry_head(
@@ -465,11 +433,7 @@ def _retry_head(
         # file-by-file here (its manifest conventions / delete
         # granularity are its own) — always surface the conflict.
         return None
-    if (
-        meta.get("schemas") != base_meta.get("schemas")
-        or meta.get("partition-specs") != base_meta.get("partition-specs")
-        or meta.get("default-spec-id") != base_meta.get("default-spec-id")
-    ):
+    if _table_sig(meta) != _table_sig(base_meta):
         return None
     if touched or forbid_new_deletes:
         from .readers import _iceberg_snapshot_files
@@ -1187,58 +1151,35 @@ def write_iceberg_append(
     if not new_files:
         raise ValueError("append produced no data files")
 
-    def _table_sig(m: dict | None) -> str:
-        return json.dumps(
-            [
-                (m or {}).get("schemas"),
-                (m or {}).get("partition-specs"),
-                (m or {}).get("default-spec-id"),
-            ],
-            sort_keys=True,
-        )
-
     orig_sig = _table_sig(meta)
-    last_err: IcebergCommitConflict | None = None
-    for _attempt in range(5):
-        if _attempt:
-            # jittered growing backoff (r13, mirrors _retry_on_conflict):
-            # back-to-back CAS retries under burst contention lose every
-            # race in the same wave; 5 attempts (was 3) absorb a
-            # maintainer + injected-fault storm on a loaded box — a
-            # commuting append that CAN commit eventually should, and the
-            # retry re-validates schema/spec/txn each attempt so more
-            # tries never change what lands.
-            import random as _random
 
-            time.sleep(_random.uniform(0, 0.05 * (2 ** _attempt)))
-            # CAS lost: reload and re-stage the METADATA on top of the
-            # winner — appends commute, so the staged data files (and
-            # their footer-derived stats) stay valid as long as the
-            # schema and partition spec did not change underneath us.
-            meta, ver = _load_meta(meta_dir)
-            if meta is not None and meta.get("properties", {}).get(
-                "writer"
-            ) != _WRITER_TAG:
-                raise NotImplementedError(
-                    "refusing to append to an Iceberg table created by "
-                    "another writer: use the iceberg-spark-runtime "
-                    "connector"
-                )
-            if _table_sig(meta) != orig_sig:
-                raise IcebergCommitConflict(
-                    "concurrent commit changed the table schema or "
-                    "partition spec while this append was staged: re-run "
-                    "the append"
-                )
-            if _txn_already_committed(meta, txn):
-                # the CAS winner carried this very txn: drop the staged
-                # duplicate and report the committed snapshot
-                for f, _pv, _fmt, _n in new_files:
-                    try:
-                        os.remove(f)
-                    except OSError:
-                        pass
-                return meta["current-snapshot-id"]
+    def rebase(conflict):
+        # CAS lost: reload and re-stage the METADATA on top of the winner
+        # — appends commute, so the staged data files (and their
+        # footer-derived stats) stay valid as long as the schema and
+        # partition spec did not change underneath us.
+        nonlocal meta, ver
+        meta, ver = _load_meta(meta_dir)
+        if meta is not None and meta.get("properties", {}).get(
+            "writer"
+        ) != _WRITER_TAG:
+            raise NotImplementedError(
+                "refusing to append to an Iceberg table created by "
+                "another writer: use the iceberg-spark-runtime "
+                "connector"
+            )
+        if _table_sig(meta) != orig_sig:
+            raise IcebergCommitConflict(
+                "concurrent commit changed the table schema or "
+                "partition spec while this append was staged: re-run "
+                "the append"
+            )
+        if _txn_already_committed(meta, txn):
+            # the CAS winner carried this very txn: the staged duplicate
+            # is dropped and the committed snapshot reported
+            return meta["current-snapshot-id"]
+
+    def attempt(written):
         now_ms = int(time.time() * 1000)
         snap_id = now_ms * 1000 + (ver + 1)  # unique, monotone per table
         seq = (meta.get("last-sequence-number", 0) if meta else 0) + 1
@@ -1282,6 +1223,7 @@ def write_iceberg_append(
             else MANIFEST_ENTRY_SCHEMA
         )
         write_avro_file(manifest, entry_schema, entries)
+        written.append(manifest)
 
         # append semantics: manifest-list = all prior manifests + this one.
         # The BASE is the branch head for branch appends (write-audit-
@@ -1321,6 +1263,7 @@ def write_iceberg_append(
                 }
             ],
         )
+        written.append(mlist)
 
         snapshot = {
             "snapshot-id": snap_id,
@@ -1406,12 +1349,15 @@ def write_iceberg_append(
             new_meta["last-column-id"] = max(
                 f["id"] for f in schemas[0]["fields"]
             )
-        try:
-            _commit_metadata(meta_dir, ver, new_meta)
-            return snap_id
-        except IcebergCommitConflict as e:
-            last_err = e
-    raise last_err
+        _commit_metadata(meta_dir, ver, new_meta)
+        return snap_id
+
+    return commit_with_retry(
+        attempt,
+        attempts=APPEND_ATTEMPTS,
+        rebase=rebase,
+        staged=[f for f, _pv, _fmt, _n in new_files],
+    )
 
 
 # Delete commits collect (file_path, pos) rows to the driver before writing
@@ -1432,7 +1378,8 @@ def write_iceberg_position_deletes(
     touched files, so the staged (file,pos) coordinates are stale),
     re-run the whole delete against the winner's head instead of
     raising — the fresh scan re-derives coordinates, i.e.
-    snapshot-isolation serial re-execution (:func:`_rescan_retry`).
+    snapshot-isolation serial re-execution through
+    :func:`~.commit.commit_with_retry`).
 
     The matching rows' (file_path, pos) coordinates come from the hidden
     ``_metadata`` columns of a distributed scan (existing position deletes
@@ -1450,8 +1397,10 @@ def write_iceberg_position_deletes(
     if on_conflict not in ("surface", "rescan"):
         raise ValueError("on_conflict must be 'surface' or 'rescan'")
     if on_conflict == "rescan":
-        return _rescan_retry(
-            lambda: write_iceberg_position_deletes(spark, path, condition)
+        return commit_with_retry(
+            lambda _written: write_iceberg_position_deletes(
+                spark, path, condition
+            )
         )
     meta_dir = os.path.join(path, "metadata")
     meta, ver = _load_meta(meta_dir)
@@ -1527,12 +1476,32 @@ def _commit_delete_file(
     files live while rewriting row images our coordinates can't reach;
     round-7 advisor); equality deletes are declarative (``touched=None``)
     and re-apply at the new head's sequence — the serial order "winner
-    first, then this delete". A failed validation deletes the staged
-    delete file and surfaces the conflict."""
+    first, then this delete". A failed validation surfaces the
+    conflict; whenever the commit does not land, the staged delete file
+    is removed."""
     from .avro_lite import read_avro_file
 
-    last_err: IcebergCommitConflict | None = None
-    for _attempt in range(3):
+    def rebase(conflict):
+        # Position deletes (touched set) must ALSO reject heads that
+        # gained delete content over the touched files: a concurrent
+        # UPDATE keeps those files live (it masks rows via new position
+        # deletes and adds rewritten image files), so the live-file check
+        # alone would pass while rows whose rewritten images still match
+        # our predicate silently escape the retried (file,pos)
+        # coordinates.
+        nonlocal meta, ver
+        reloaded = (
+            _retry_head(
+                path, meta, touched=touched, forbid_new_deletes=bool(touched)
+            )
+            if path is not None
+            else None
+        )
+        if reloaded is None:
+            raise conflict
+        meta, ver = reloaded
+
+    def attempt(written):
         now_ms = int(time.time() * 1000)
         snap_id = now_ms * 1000 + (ver + 1)
         seq = meta.get("last-sequence-number", 0) + 1
@@ -1555,6 +1524,7 @@ def _commit_delete_file(
                 }
             ],
         )
+        written.append(manifest)
         cur = next(
             s
             for s in meta["snapshots"]
@@ -1580,6 +1550,7 @@ def _commit_delete_file(
                 }
             ],
         )
+        written.append(mlist)
         snapshot = {
             "snapshot-id": snap_id,
             "sequence-number": seq,
@@ -1596,46 +1567,10 @@ def _commit_delete_file(
                 "current-snapshot-id": snap_id,
             },
         )
-        try:
-            _commit_metadata(meta_dir, ver, new_meta)
-            return snap_id
-        except IcebergCommitConflict as e:
-            last_err = e
-            # this attempt's manifest + list embed the lost snap id
-            for f in (manifest, mlist):
-                try:
-                    os.remove(f)
-                except OSError:
-                    pass
-            # Position deletes (touched set) must ALSO reject heads that
-            # gained delete content over the touched files: a concurrent
-            # UPDATE keeps those files live (it masks rows via new
-            # position deletes and adds rewritten image files), so the
-            # live-file check alone would pass while rows whose rewritten
-            # images still match our predicate silently escape the
-            # retried (file,pos) coordinates (round-7 advisor).
-            reloaded = (
-                _retry_head(
-                    path,
-                    meta,
-                    touched=touched,
-                    forbid_new_deletes=bool(touched),
-                )
-                if path is not None
-                else None
-            )
-            if reloaded is None:
-                try:
-                    os.remove(del_file)
-                except OSError:
-                    pass
-                raise
-            meta, ver = reloaded
-    try:
-        os.remove(del_file)
-    except OSError:
-        pass
-    raise last_err
+        _commit_metadata(meta_dir, ver, new_meta)
+        return snap_id
+
+    return commit_with_retry(attempt, rebase=rebase, staged=[del_file])
 
 
 def write_iceberg_equality_deletes(spark, path: str, keys: DataFrame) -> int:
@@ -1795,8 +1730,8 @@ def merge_iceberg_rows(
         # whole merge re-runs against the winner's head (fresh key
         # membership, fresh ambiguity probe); txn idempotency still
         # short-circuits redelivered batches on each attempt
-        return _rescan_retry(
-            lambda: merge_iceberg_rows(
+        return commit_with_retry(
+            lambda _written: merge_iceberg_rows(
                 spark, path, source, on, when_matched,
                 when_not_matched, file_format, txn,
             )
@@ -1940,7 +1875,6 @@ def merge_iceberg_rows(
     # stage the data files (distributed write; zero-row shards dropped)
     new_files: list[tuple[str, dict | None, str, int | None]] = []
     del_file: str | None = None
-    staged_ok = False
     stage = os.path.join(path, f"__stage-{uuid.uuid4().hex[:12]}")
     try:
         if rows is not None:
@@ -1978,170 +1912,163 @@ def merge_iceberg_rows(
                 data_dir, f"eq-delete-{uuid.uuid4().hex[:16]}.parquet"
             )
             pq.write_table(del_tbl, del_file)
-        if not new_files and del_file is None:
-            raise ValueError(
-                "merge changed nothing (empty source, or no matching "
-                "keys with inserts ignored)"
-            )
-
-        from .avro_lite import read_avro_file
-
-        last_err: IcebergCommitConflict | None = None
-        for _attempt in range(3):
-            now_ms = int(time.time() * 1000)
-            snap_id = now_ms * 1000 + (ver + 1)
-            seq = meta.get("last-sequence-number", 0) + 1
-            new_manifests = []
-            if new_files:
-                entries = []
-                for f, pvals, fmt, nrows in new_files:
-                    if fmt == "PARQUET":
-                        pmeta = pq.read_metadata(f)
-                        lo, hi = _file_bounds(pmeta, schemas[0])
-                        nrows = pmeta.num_rows
-                    else:
-                        lo = hi = None
-                    rec = {
-                        "content": 0,
-                        "file_path": f,
-                        "file_format": fmt,
-                        "record_count": nrows,
-                        "file_size_in_bytes": os.path.getsize(f),
-                        "lower_bounds": lo,
-                        "upper_bounds": hi,
-                    }
-                    if part_fields:
-                        rec["partition"] = pvals
-                    entries.append(
-                        {
-                            "status": 1,
-                            "snapshot_id": snap_id,
-                            "data_file": rec,
-                        }
-                    )
-                manifest = os.path.join(meta_dir, f"m-{snap_id}.avro")
-                write_avro_file(
-                    manifest,
-                    _partition_manifest_schema(part_fields)
-                    if part_fields
-                    else MANIFEST_ENTRY_SCHEMA,
-                    entries,
-                )
-                new_manifests.append((manifest, 0))
-            if del_file is not None:
-                dmanifest = os.path.join(
-                    meta_dir, f"m-{snap_id}-deletes.avro"
-                )
-                write_avro_file(
-                    dmanifest,
-                    MANIFEST_ENTRY_SCHEMA,
-                    [
-                        {
-                            "status": 1,
-                            "snapshot_id": snap_id,
-                            "data_file": {
-                                "content": 2,
-                                "file_path": del_file,
-                                "file_format": "PARQUET",
-                                "record_count": del_tbl.num_rows,
-                                "file_size_in_bytes": os.path.getsize(
-                                    del_file
-                                ),
-                                "equality_ids": [
-                                    name_to_id[c] for c in keys
-                                ],
-                            },
-                        }
-                    ],
-                )
-                new_manifests.append((dmanifest, 1))
-
-            cur = next(
-                s
-                for s in meta["snapshots"]
-                if s["snapshot-id"] == meta["current-snapshot-id"]
-            )
-            _, prior = read_avro_file(cur["manifest-list"])
-            mlist = os.path.join(meta_dir, f"snap-{snap_id}.avro")
-            write_avro_file(
-                mlist,
-                MANIFEST_FILE_SCHEMA,
-                [
-                    dict(m, sequence_number=m.get("sequence_number", 0))
-                    for m in prior
-                ]
-                + [
-                    {
-                        "manifest_path": mpath,
-                        "manifest_length": os.path.getsize(mpath),
-                        "partition_spec_id": _default_spec_id(meta),
-                        "content": mcontent,
-                        "sequence_number": seq,
-                        "added_snapshot_id": snap_id,
-                    }
-                    for mpath, mcontent in new_manifests
-                ],
-            )
-            snapshot = {
-                "snapshot-id": snap_id,
-                "sequence-number": seq,
-                "timestamp-ms": now_ms,
-                "manifest-list": mlist,
-                "parent-snapshot-id": meta["current-snapshot-id"],
-                "summary": {"operation": "overwrite"},
-            }
-            if txn is not None:
-                snapshot["summary"]["txn-app"] = txn[0]
-                snapshot["summary"]["txn-version"] = str(int(txn[1]))
-            new_meta = dict(
-                meta,
-                **{
-                    "last-sequence-number": seq,
-                    "last-updated-ms": now_ms,
-                    "snapshots": meta.get("snapshots", []) + [snapshot],
-                    "current-snapshot-id": snap_id,
-                },
-            )
-            try:
-                _commit_metadata(meta_dir, ver, new_meta)
-                staged_ok = True
-                return snap_id
-            except IcebergCommitConflict as e:
-                last_err = e
-                # drop this attempt's manifests/list (they embed the
-                # lost snap id); the staged data/delete files are
-                # head-independent and reusable on retry
-                for f in [m for m, _c in new_manifests] + [mlist]:
-                    try:
-                        os.remove(f)
-                    except OSError:
-                        pass
-                reloaded = (
-                    _retry_head(path, meta) if retryable else None
-                )
-                if reloaded is None:
-                    raise
-                meta, ver = reloaded
-                if _txn_already_committed(meta, txn):
-                    # the CAS winner carried this very txn (redelivered
-                    # batch racing itself): nothing to commit; the
-                    # finally block cleans the staged files
-                    return meta["current-snapshot-id"]
-        raise last_err
+    except BaseException:
+        # a failed staging leaves nothing it moved into the table directory
+        remove_quietly(
+            [p for p, _pv, _fmt, _n in new_files]
+            + ([del_file] if del_file else [])
+        )
+        raise
     finally:
         shutil.rmtree(stage, ignore_errors=True)
-        if not staged_ok:
-            # lost CAS or staging failure: remove everything this merge
-            # moved into the table directory (none of it is referenced;
-            # manifest/manifest-list debris in metadata/ is what
-            # remove_iceberg_orphan_files sweeps)
-            for f in [p for p, _pv, _fmt, _n in new_files] + (
-                [del_file] if del_file else []
-            ):
-                try:
-                    os.remove(f)
-                except OSError:
-                    pass
+    if not new_files and del_file is None:
+        raise ValueError(
+            "merge changed nothing (empty source, or no matching "
+            "keys with inserts ignored)"
+        )
+
+    from .avro_lite import read_avro_file
+
+    def rebase(conflict):
+        # only the declarative upsert re-applies on the winner's head;
+        # the staged data/delete files are head-independent
+        nonlocal meta, ver
+        reloaded = _retry_head(path, meta) if retryable else None
+        if reloaded is None:
+            raise conflict
+        meta, ver = reloaded
+        if _txn_already_committed(meta, txn):
+            # the CAS winner carried this very txn (redelivered batch
+            # racing itself): nothing to commit
+            return meta["current-snapshot-id"]
+
+    def attempt(written):
+        now_ms = int(time.time() * 1000)
+        snap_id = now_ms * 1000 + (ver + 1)
+        seq = meta.get("last-sequence-number", 0) + 1
+        new_manifests = []
+        if new_files:
+            entries = []
+            for f, pvals, fmt, nrows in new_files:
+                if fmt == "PARQUET":
+                    pmeta = pq.read_metadata(f)
+                    lo, hi = _file_bounds(pmeta, schemas[0])
+                    nrows = pmeta.num_rows
+                else:
+                    lo = hi = None
+                rec = {
+                    "content": 0,
+                    "file_path": f,
+                    "file_format": fmt,
+                    "record_count": nrows,
+                    "file_size_in_bytes": os.path.getsize(f),
+                    "lower_bounds": lo,
+                    "upper_bounds": hi,
+                }
+                if part_fields:
+                    rec["partition"] = pvals
+                entries.append(
+                    {
+                        "status": 1,
+                        "snapshot_id": snap_id,
+                        "data_file": rec,
+                    }
+                )
+            manifest = os.path.join(meta_dir, f"m-{snap_id}.avro")
+            write_avro_file(
+                manifest,
+                _partition_manifest_schema(part_fields)
+                if part_fields
+                else MANIFEST_ENTRY_SCHEMA,
+                entries,
+            )
+            written.append(manifest)
+            new_manifests.append((manifest, 0))
+        if del_file is not None:
+            dmanifest = os.path.join(
+                meta_dir, f"m-{snap_id}-deletes.avro"
+            )
+            write_avro_file(
+                dmanifest,
+                MANIFEST_ENTRY_SCHEMA,
+                [
+                    {
+                        "status": 1,
+                        "snapshot_id": snap_id,
+                        "data_file": {
+                            "content": 2,
+                            "file_path": del_file,
+                            "file_format": "PARQUET",
+                            "record_count": del_tbl.num_rows,
+                            "file_size_in_bytes": os.path.getsize(
+                                del_file
+                            ),
+                            "equality_ids": [
+                                name_to_id[c] for c in keys
+                            ],
+                        },
+                    }
+                ],
+            )
+            written.append(dmanifest)
+            new_manifests.append((dmanifest, 1))
+
+        cur = next(
+            s
+            for s in meta["snapshots"]
+            if s["snapshot-id"] == meta["current-snapshot-id"]
+        )
+        _, prior = read_avro_file(cur["manifest-list"])
+        mlist = os.path.join(meta_dir, f"snap-{snap_id}.avro")
+        write_avro_file(
+            mlist,
+            MANIFEST_FILE_SCHEMA,
+            [
+                dict(m, sequence_number=m.get("sequence_number", 0))
+                for m in prior
+            ]
+            + [
+                {
+                    "manifest_path": mpath,
+                    "manifest_length": os.path.getsize(mpath),
+                    "partition_spec_id": _default_spec_id(meta),
+                    "content": mcontent,
+                    "sequence_number": seq,
+                    "added_snapshot_id": snap_id,
+                }
+                for mpath, mcontent in new_manifests
+            ],
+        )
+        written.append(mlist)
+        snapshot = {
+            "snapshot-id": snap_id,
+            "sequence-number": seq,
+            "timestamp-ms": now_ms,
+            "manifest-list": mlist,
+            "parent-snapshot-id": meta["current-snapshot-id"],
+            "summary": {"operation": "overwrite"},
+        }
+        if txn is not None:
+            snapshot["summary"]["txn-app"] = txn[0]
+            snapshot["summary"]["txn-version"] = str(int(txn[1]))
+        new_meta = dict(
+            meta,
+            **{
+                "last-sequence-number": seq,
+                "last-updated-ms": now_ms,
+                "snapshots": meta.get("snapshots", []) + [snapshot],
+                "current-snapshot-id": snap_id,
+            },
+        )
+        _commit_metadata(meta_dir, ver, new_meta)
+        return snap_id
+
+    return commit_with_retry(
+        attempt,
+        rebase=rebase,
+        staged=[p for p, _pv, _fmt, _n in new_files]
+        + ([del_file] if del_file else []),
+    )
 
 
 def update_iceberg_rows(
@@ -2179,8 +2106,10 @@ def update_iceberg_rows(
         # snapshot-isolation serial re-execution (round 8): re-run the
         # whole UPDATE against the winner's head — fresh scan, fresh
         # coordinates, fresh rewritten images
-        return _rescan_retry(
-            lambda: update_iceberg_rows(spark, path, predicate, set_exprs)
+        return commit_with_retry(
+            lambda _written: update_iceberg_rows(
+                spark, path, predicate, set_exprs
+            )
         )
     meta_dir = os.path.join(path, "metadata")
     data_dir = os.path.join(path, "data")
@@ -2244,7 +2173,6 @@ def update_iceberg_rows(
         )
     rows = sorted((r.file_path, r.pos) for r in coords)
 
-    staged_ok = False
     new_files: list[tuple[str, dict | None]] = []
     del_file: str | None = None
     stage = os.path.join(path, f"__stage-{uuid.uuid4().hex[:12]}")
@@ -2283,153 +2211,148 @@ def update_iceberg_rows(
             ),
             del_file,
         )
+    except BaseException:
+        # a failed staging leaves nothing it moved into the table directory
+        remove_quietly(
+            [p for p, _pv in new_files] + ([del_file] if del_file else [])
+        )
+        raise
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
 
-        from .avro_lite import read_avro_file
+    from .avro_lite import read_avro_file
 
-        last_err: IcebergCommitConflict | None = None
-        for _attempt in range(3):
-            now_ms = int(time.time() * 1000)
-            snap_id = now_ms * 1000 + (ver + 1)
-            seq = meta.get("last-sequence-number", 0) + 1
-            new_manifests: list[tuple[str, int]] = []
-            if new_files:
-                entries = []
-                for f, pvals in new_files:
-                    pmeta = pq.read_metadata(f)
-                    lo, hi = _file_bounds(pmeta, schemas[0])
-                    rec = {
-                        "content": 0,
-                        "file_path": f,
-                        "file_format": "PARQUET",
-                        "record_count": pmeta.num_rows,
-                        "file_size_in_bytes": os.path.getsize(f),
-                        "lower_bounds": lo,
-                        "upper_bounds": hi,
-                    }
-                    if part_fields:
-                        rec["partition"] = pvals
-                    entries.append(
-                        {
-                            "status": 1,
-                            "snapshot_id": snap_id,
-                            "data_file": rec,
-                        }
-                    )
-                manifest = os.path.join(meta_dir, f"m-{snap_id}.avro")
-                write_avro_file(
-                    manifest,
-                    _partition_manifest_schema(part_fields)
-                    if part_fields
-                    else MANIFEST_ENTRY_SCHEMA,
-                    entries,
-                )
-                new_manifests.append((manifest, 0))
-            dmanifest = os.path.join(meta_dir, f"m-{snap_id}-deletes.avro")
-            write_avro_file(
-                dmanifest,
-                MANIFEST_ENTRY_SCHEMA,
-                [
+    def rebase(conflict):
+        # retry only when the winner provably didn't touch our basis:
+        # every file whose rows we re-wrote is still live AND the winner
+        # added no delete content that could mask rows in them (our
+        # rewritten images would resurrect an interleaved delete)
+        nonlocal meta, ver
+        reloaded = _retry_head(
+            path, meta, touched={r[0] for r in rows}, forbid_new_deletes=True
+        )
+        if reloaded is None:
+            raise conflict
+        meta, ver = reloaded
+
+    def attempt(written):
+        now_ms = int(time.time() * 1000)
+        snap_id = now_ms * 1000 + (ver + 1)
+        seq = meta.get("last-sequence-number", 0) + 1
+        new_manifests: list[tuple[str, int]] = []
+        if new_files:
+            entries = []
+            for f, pvals in new_files:
+                pmeta = pq.read_metadata(f)
+                lo, hi = _file_bounds(pmeta, schemas[0])
+                rec = {
+                    "content": 0,
+                    "file_path": f,
+                    "file_format": "PARQUET",
+                    "record_count": pmeta.num_rows,
+                    "file_size_in_bytes": os.path.getsize(f),
+                    "lower_bounds": lo,
+                    "upper_bounds": hi,
+                }
+                if part_fields:
+                    rec["partition"] = pvals
+                entries.append(
                     {
                         "status": 1,
                         "snapshot_id": snap_id,
-                        "data_file": {
-                            "content": 1,
-                            "file_path": del_file,
-                            "file_format": "PARQUET",
-                            "record_count": len(rows),
-                            "file_size_in_bytes": os.path.getsize(del_file),
-                        },
+                        "data_file": rec,
                     }
-                ],
-            )
-            new_manifests.append((dmanifest, 1))
-
-            cur = next(
-                s
-                for s in meta["snapshots"]
-                if s["snapshot-id"] == meta["current-snapshot-id"]
-            )
-            _, prior = read_avro_file(cur["manifest-list"])
-            mlist = os.path.join(meta_dir, f"snap-{snap_id}.avro")
+                )
+            manifest = os.path.join(meta_dir, f"m-{snap_id}.avro")
             write_avro_file(
-                mlist,
-                MANIFEST_FILE_SCHEMA,
-                [
-                    dict(m, sequence_number=m.get("sequence_number", 0))
-                    for m in prior
-                ]
-                + [
-                    {
-                        "manifest_path": mpath,
-                        "manifest_length": os.path.getsize(mpath),
-                        "partition_spec_id": _default_spec_id(meta),
-                        "content": mcontent,
-                        "sequence_number": seq,
-                        "added_snapshot_id": snap_id,
-                    }
-                    for mpath, mcontent in new_manifests
-                ],
+                manifest,
+                _partition_manifest_schema(part_fields)
+                if part_fields
+                else MANIFEST_ENTRY_SCHEMA,
+                entries,
             )
-            snapshot = {
-                "snapshot-id": snap_id,
-                "sequence-number": seq,
-                "timestamp-ms": now_ms,
-                "manifest-list": mlist,
-                "parent-snapshot-id": meta["current-snapshot-id"],
-                "summary": {"operation": "overwrite"},
-            }
-            try:
-                _commit_metadata(
-                    meta_dir,
-                    ver,
-                    dict(
-                        meta,
-                        **{
-                            "last-sequence-number": seq,
-                            "last-updated-ms": now_ms,
-                            "snapshots": meta.get("snapshots", [])
-                            + [snapshot],
-                            "current-snapshot-id": snap_id,
-                        },
-                    ),
-                )
-                staged_ok = True
-                return snap_id
-            except IcebergCommitConflict as e:
-                last_err = e
-                for f in [m for m, _c in new_manifests] + [mlist]:
-                    try:
-                        os.remove(f)
-                    except OSError:
-                        pass
-                # retry only when the winner provably didn't touch our
-                # basis: every file whose rows we re-wrote is still live
-                # AND the winner added no delete content that could mask
-                # rows in them (our rewritten images would resurrect an
-                # interleaved delete)
-                reloaded = _retry_head(
-                    path,
-                    meta,
-                    touched={r[0] for r in rows},
-                    forbid_new_deletes=True,
-                )
-                if reloaded is None:
-                    raise
-                meta, ver = reloaded
-        raise last_err
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        if not staged_ok:
-            for f in [p for p, _pv in new_files] + (
-                [del_file] if del_file else []
-            ):
-                try:
-                    os.remove(f)
-                except OSError:
-                    pass
+            written.append(manifest)
+            new_manifests.append((manifest, 0))
+        dmanifest = os.path.join(meta_dir, f"m-{snap_id}-deletes.avro")
+        write_avro_file(
+            dmanifest,
+            MANIFEST_ENTRY_SCHEMA,
+            [
+                {
+                    "status": 1,
+                    "snapshot_id": snap_id,
+                    "data_file": {
+                        "content": 1,
+                        "file_path": del_file,
+                        "file_format": "PARQUET",
+                        "record_count": len(rows),
+                        "file_size_in_bytes": os.path.getsize(del_file),
+                    },
+                }
+            ],
+        )
+        written.append(dmanifest)
+        new_manifests.append((dmanifest, 1))
+
+        cur = next(
+            s
+            for s in meta["snapshots"]
+            if s["snapshot-id"] == meta["current-snapshot-id"]
+        )
+        _, prior = read_avro_file(cur["manifest-list"])
+        mlist = os.path.join(meta_dir, f"snap-{snap_id}.avro")
+        write_avro_file(
+            mlist,
+            MANIFEST_FILE_SCHEMA,
+            [
+                dict(m, sequence_number=m.get("sequence_number", 0))
+                for m in prior
+            ]
+            + [
+                {
+                    "manifest_path": mpath,
+                    "manifest_length": os.path.getsize(mpath),
+                    "partition_spec_id": _default_spec_id(meta),
+                    "content": mcontent,
+                    "sequence_number": seq,
+                    "added_snapshot_id": snap_id,
+                }
+                for mpath, mcontent in new_manifests
+            ],
+        )
+        written.append(mlist)
+        snapshot = {
+            "snapshot-id": snap_id,
+            "sequence-number": seq,
+            "timestamp-ms": now_ms,
+            "manifest-list": mlist,
+            "parent-snapshot-id": meta["current-snapshot-id"],
+            "summary": {"operation": "overwrite"},
+        }
+        _commit_metadata(
+            meta_dir,
+            ver,
+            dict(
+                meta,
+                **{
+                    "last-sequence-number": seq,
+                    "last-updated-ms": now_ms,
+                    "snapshots": meta.get("snapshots", [])
+                    + [snapshot],
+                    "current-snapshot-id": snap_id,
+                },
+            ),
+        )
+        return snap_id
+
+    return commit_with_retry(
+        attempt,
+        rebase=rebase,
+        staged=[p for p, _pv in new_files] + [del_file],
+    )
 
 
-@_retry_on_conflict
+@recompute_on_conflict
 def rewrite_iceberg_table(
     spark,
     path: str,
@@ -2839,23 +2762,21 @@ def rewrite_iceberg_table(
             "current-snapshot-id": snap_id,
         },
     )
-    try:
-        _commit_metadata(meta_dir, ver, new_meta)
-    except IcebergCommitConflict:
-        # lost the CAS race: this attempt's staged artifacts (compacted
-        # data files + the manifests/list referencing them) are garbage —
-        # delete them NOW instead of deferring to remove_orphan_files, so
-        # a 3-attempt retry burst strands zero bytes (round-6 advisor)
-        for f in [p for p, _pv in new_files] + [
+    # lost the CAS race: this run's staged artifacts (compacted data
+    # files + the manifests/list referencing them) are garbage — removed
+    # NOW instead of deferred to remove_orphan_files, so a retry burst
+    # strands zero bytes; the decorator re-runs the verb on the new head
+    commit_with_retry(
+        lambda _written: _commit_metadata(meta_dir, ver, new_meta),
+        attempts=1,
+        staged=[p for p, _pv in new_files]
+        + [
             r["manifest_path"]
             for r in mlist_rows
             if r["added_snapshot_id"] == snap_id
-        ] + [mlist]:
-            try:
-                os.remove(f)
-            except OSError:
-                pass
-        raise
+        ]
+        + [mlist],
+    )
     return snap_id
 
 
@@ -2905,10 +2826,13 @@ def rewrite_iceberg_manifests(path: str, min_manifests: int = 3) -> int:
             "by another writer: use the iceberg-spark-runtime connector"
         )
 
-    last_err: IcebergCommitConflict | None = None
-    for _attempt in range(3):
-        if _attempt:
-            meta, ver = _load_meta(meta_dir)
+    def rebase(_conflict):
+        # consolidation must see a settled manifest list: rebuild from
+        # the winner's head
+        nonlocal meta, ver
+        meta, ver = _load_meta(meta_dir)
+
+    def attempt(written):
         cur = next(
             s
             for s in meta["snapshots"]
@@ -2979,10 +2903,12 @@ def rewrite_iceberg_manifests(path: str, min_manifests: int = 3) -> int:
                 _entry_schema_for_spec(meta, spec_id),
                 data_by_spec[spec_id],
             )
+            written.append(mpath)
             new_rows.append((mpath, 0, spec_id))
         if del_entries:
             dpath = os.path.join(meta_dir, f"m-{snap_id}-deletes.avro")
             write_avro_file(dpath, MANIFEST_ENTRY_SCHEMA, del_entries)
+            written.append(dpath)
             new_rows.append((dpath, 1, _default_spec_id(meta)))
         mlist = os.path.join(meta_dir, f"snap-{snap_id}.avro")
         write_avro_file(
@@ -3003,6 +2929,7 @@ def rewrite_iceberg_manifests(path: str, min_manifests: int = 3) -> int:
                 for mpath, mcontent, mspec in new_rows
             ],
         )
+        written.append(mlist)
         snapshot = {
             "snapshot-id": snap_id,
             "sequence-number": seq,
@@ -3020,20 +2947,10 @@ def rewrite_iceberg_manifests(path: str, min_manifests: int = 3) -> int:
                 "current-snapshot-id": snap_id,
             },
         )
-        try:
-            _commit_metadata(meta_dir, ver, new_meta)
-            return snap_id
-        except IcebergCommitConflict as e:
-            # losing attempt deletes its own staged manifests/list —
-            # metadata-only, but KBs per lost race still shouldn't pile
-            # up as orphans across retries (round-6 advisor)
-            for f in [mpath for mpath, _c, _s in new_rows] + [mlist]:
-                try:
-                    os.remove(f)
-                except OSError:
-                    pass
-            last_err = e
-    raise last_err
+        _commit_metadata(meta_dir, ver, new_meta)
+        return snap_id
+
+    return commit_with_retry(attempt, rebase=rebase)
 
 
 def _entry_schema_for_spec(meta: dict, spec_id: int) -> dict:
@@ -3194,10 +3111,12 @@ def drop_iceberg_partition(
             for want in parts
         )
 
-    last_err: IcebergCommitConflict | None = None
-    for _attempt in range(3):
-        if _attempt:
-            meta, ver = _load_meta(meta_dir)
+    def rebase(_conflict):
+        # the drop re-derives its matches from the winner's head
+        nonlocal meta, ver
+        meta, ver = _load_meta(meta_dir)
+
+    def attempt(written):
         if meta.get("current-snapshot-id") in (None, -1):
             return None  # no snapshot: nothing to drop
         cur = next(
@@ -3211,7 +3130,6 @@ def drop_iceberg_partition(
         seq = meta.get("last-sequence-number", 0) + 1
         keep_rows: list[dict] = []  # original list rows, verbatim
         new_rows: list[tuple[str, int, int]] = []
-        staged: list[str] = []
         dropped: list[str] = []
         stray: list[str] = []
         for m in manifests:
@@ -3265,15 +3183,11 @@ def drop_iceberg_partition(
                 write_avro_file(
                     mpath, _entry_schema_for_spec(meta, m_spec), recs
                 )
-                staged.append(mpath)
+                written.append(mpath)
                 new_rows.append((mpath, 0, m_spec))
             # else: every live entry dropped — the manifest leaves the list
         if stray:
-            for f in staged:
-                try:
-                    os.remove(f)
-                except OSError:
-                    pass
+            remove_quietly(written)
             stray = sorted(set(stray))
             raise ValueError(
                 f"pinned files {stray[:3]}{'...' if len(stray) > 3 else ''} "
@@ -3299,7 +3213,7 @@ def drop_iceberg_partition(
                 for mpath, mcontent, mspec in new_rows
             ],
         )
-        staged.append(mlist)
+        written.append(mlist)
         snapshot = {
             "snapshot-id": snap_id,
             "sequence-number": seq,
@@ -3320,20 +3234,13 @@ def drop_iceberg_partition(
                 "current-snapshot-id": snap_id,
             },
         )
-        try:
-            _commit_metadata(meta_dir, ver, new_meta)
-            return snap_id
-        except IcebergCommitConflict as e:
-            for f in staged:
-                try:
-                    os.remove(f)
-                except OSError:
-                    pass
-            last_err = e
-    raise last_err
+        _commit_metadata(meta_dir, ver, new_meta)
+        return snap_id
+
+    return commit_with_retry(attempt, rebase=rebase)
 
 
-@_retry_on_conflict
+@recompute_on_conflict
 def expire_iceberg_snapshots(path: str, keep_last: int = 3) -> int:
     """Snapshot EXPIRATION (the other half of table maintenance next to
     :func:`rewrite_iceberg_table`): keep only the newest ``keep_last``
@@ -3548,7 +3455,7 @@ def rollback_iceberg_table(path: str, snapshot_id: int) -> int:
     return snapshot_id
 
 
-@_retry_on_conflict
+@recompute_on_conflict
 def tag_iceberg_snapshot(
     path: str, name: str, snapshot_id: int | None = None
 ) -> int:
@@ -3613,7 +3520,7 @@ def _load_name_mapping(meta: dict | None) -> list[dict]:
     return json.loads(raw) if raw else []
 
 
-@_retry_on_conflict
+@recompute_on_conflict
 def rename_iceberg_column(path: str, old: str, new: str) -> int:
     """RENAME a column — metadata-only, one KB-scale CAS commit (spec
     "Schema Evolution": ids are forever, names are labels). The current
@@ -3700,7 +3607,7 @@ def rename_iceberg_column(path: str, old: str, new: str) -> int:
     return new_schema["schema-id"]
 
 
-@_retry_on_conflict
+@recompute_on_conflict
 def drop_iceberg_column(path: str, name: str) -> int:
     """DROP a column — metadata-only, one KB-scale CAS commit (spec
     "Schema Evolution"): the field leaves the CURRENT schema; data files
@@ -3785,7 +3692,7 @@ def drop_iceberg_column(path: str, name: str) -> int:
     return new_schema["schema-id"]
 
 
-@_retry_on_conflict
+@recompute_on_conflict
 def update_iceberg_partition_spec(
     path: str, partition_by: "tuple[str, ...]"
 ) -> int:
@@ -3931,7 +3838,7 @@ def update_iceberg_partition_spec(
     return new_spec["spec-id"]
 
 
-@_retry_on_conflict
+@recompute_on_conflict
 def move_iceberg_ref(path: str, name: str, snapshot_id: int) -> int:
     """Create-or-move a TAG ref to ``snapshot_id`` in ONE metadata
     commit — the refs-map entry is replaced atomically, so there is no
@@ -3977,7 +3884,7 @@ def move_iceberg_ref(path: str, name: str, snapshot_id: int) -> int:
     return int(snapshot_id)
 
 
-@_retry_on_conflict
+@recompute_on_conflict
 def drop_iceberg_ref(path: str, name: str) -> int:
     """Remove a named ref; the snapshot it pinned becomes expirable
     again. Returns the snapshot id the ref pointed at."""
@@ -4001,7 +3908,7 @@ def drop_iceberg_ref(path: str, name: str) -> int:
     return pinned
 
 
-@_retry_on_conflict
+@recompute_on_conflict
 def publish_iceberg_branch(path: str, name: str, drop: bool = True) -> int:
     """WRITE-AUDIT-PUBLISH, the publish step (Iceberg's
     ``fast_forward`` procedure): move the table head to the branch head

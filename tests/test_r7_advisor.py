@@ -21,6 +21,7 @@ import os
 import pytest
 
 from mysoftware_nocnetintel_spark.sources import iceberg as ice
+from mysoftware_nocnetintel_spark.sources.commit import commit_with_retry
 from mysoftware_nocnetintel_spark.sources.iceberg import (
     IcebergCommitConflict,
     rewrite_iceberg_manifests,
@@ -146,14 +147,13 @@ def test_retry_on_conflict_backs_off_between_attempts(monkeypatch):
 
     calls = {"n": 0}
 
-    @ice._retry_on_conflict
-    def flaky():
+    def flaky(_written):
         calls["n"] += 1
         if calls["n"] < 3:
             raise IcebergCommitConflict("lost")
         return "won"
 
-    assert flaky() == "won"
+    assert commit_with_retry(flaky) == "won"
     assert calls["n"] == 3
     # jittered, bounded, GROWING windows: attempt 2 in [0, 0.1),
     # attempt 3 in [0, 0.2)
